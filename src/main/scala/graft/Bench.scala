@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Per-round benchmark main: times every registered query at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -155,7 +157,7 @@ object Bench {
       spark.catalog.clearCache()
       // stderr progress line per query (stdout stays the one JSON line)
       res match {
-        case Right(ts) => System.err.println(f"[bench] $name%-28s ${ts.map(t => f"$t%8.2f").mkString}")
+        case Right(ts) => System.err.println(f"[bench] $name%-28s ${ts.map(t => "%8.2f".formatLocal(java.util.Locale.ROOT, t)).mkString}")
         case Left(m)   => System.err.println(s"[bench] $name ERROR $m")
       }
       name -> res
@@ -165,7 +167,7 @@ object Bench {
     val errs = timed.collect { case (n, Left(m)) => n -> m }
     // 4-decimal (0.1 ms) formatting keeps the 422-key stdout line ~15 KB
     // — well under the driver's parse/capture buffer (see runs note)
-    def f4(t: Double): String = f"$t%.4f"
+    def f4(t: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, t)
     val qs = ok.map { case (k, ts) => s"${jstr(k)}:${f4(ts.min)}" }.mkString("{", ",", "}")
     val rs = ok.map { case (k, ts) => s"${jstr(k)}:${ts.map(f4).mkString("[", ",", "]")}" }.mkString("{", ",", "}")
     val es = errs.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
@@ -194,7 +196,7 @@ object Bench {
       java.nio.file.Files.createDirectories(sidecar.getParent)
       java.nio.file.Files.writeString(sidecar,
         s"""{"sf":"$sfDir","n_runs":$nRuns,"runs":$rs,"errors":$es,$sentinel}""")
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     println(s"""{"metric":"total","value":${f4(total)},"unit":"sec","policy":"min-of-$nRuns runs, cache cleared between runs; raw runs in target/bench_runs.json + stderr; per-dir materialized index tables build once per JVM (first consuming query pays the build, family siblings time index-warm)","queries":$qs,"errors":$es,"n_ok":${ok.size},"n_err":${errs.size},$sentinel,"sf":"$sfDir"}""")
     spark.stop()

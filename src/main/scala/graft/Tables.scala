@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.LongType
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -71,7 +72,8 @@ object Tables {
     * compares row sets with a numeric tolerance, not bit-exact hashes.
     * Multi-row-group files (the sf1 stress corpora),
     * directory outputs, and small tables pass through untouched, and
-    * any preflight/rewrite failure falls back to the raw path.
+    * a non-fatal preflight/rewrite failure falls back to the raw path
+    * with a WARN naming the table and the cause.
     */
   private def repairLayout(s: SparkSession, dir: String, name: String): String = {
     val src = s"$dir/$name.parquet"
@@ -109,8 +111,14 @@ object Tables {
         .option("maxRecordsPerFile", math.max(1L, (rows + 7) / 8))
         .mode("overwrite").parquet(out)
       out
-    } catch { case _: Throwable => src }
+    } catch {
+      case NonFatal(e) =>
+        log.warn(s"layout repair of table '$name' ($src) failed, reading the raw path: $e")
+        src
+    }
   }
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.SparkTestSession
+import graft.{Caches, SparkTestSession}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -86,6 +86,59 @@ class EtlSpec extends AnyFunSuite {
     assert(counts("agg") ===
       spark.read.option("header", "true").csv(aggPath).count())
     assert(counts("raw") > 0 && counts("agg") > 0)
+  }
+
+  test("Pipeline.run: counts are rows read back, and run adds no job beyond its sinks'") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    val out = Files.createTempDirectory("graft_pipe_contract").toFile
+    val table = "graft_test.pipeline_contract"
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_test")
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    // start from an empty cache so the check below sees only what run leaves
+    spark.catalog.clearCache()
+    val src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val branches: Seq[(String, DataFrame => DataFrame, DataFrame => Unit)] = Seq(
+      ("raw", identity, df => Sinks.parquet(df, s"$out/raw")),
+      ("agg", _.groupBy(col("source")).agg(count(lit(1)).as("n_docs")),
+        df => Sinks.table(df, table, Sinks.Truncate)),
+      ("even", _.filter(col("doc_id") % 2 === 0), df => Sinks.csv(df, s"$out/even")))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    def withJobs[A](body: => A): (A, Int) = {
+      ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      val a = body
+      ListenerBusDrain(spark.sparkContext)
+      (a, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (counts, runJobs) = withJobs(Pipeline(_ => src, branches).run(spark))
+      assert(spark.sharedState.cacheManager.isEmpty, "run must leave nothing cached")
+      assert(counts("raw") === spark.read.parquet(s"$out/raw").count())
+      assert(counts("agg") === spark.table(table).count())
+      assert(counts("even") === spark.read.option("header", "true").csv(s"$out/even").count())
+      assert(counts.values.forall(_ > 0))
+      val (_, sinkJobs) = withJobs(branches.foreach { case (_, transform, sink) => sink(transform(src)) })
+      assert(runJobs === sinkJobs, s"run launched $runJobs jobs, its sinks alone $sinkJobs")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      val _ = spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+  }
+
+  test("Pipeline.run fails, naming the branch, when a sink never runs its frame") {
+    val e = intercept[IllegalStateException] {
+      Pipeline.from(_.range(10).toDF())
+        .branch("never_written")(identity)(_ => ())
+        .run(spark)
+    }
+    assert(e.getMessage.contains("never_written"))
   }
 
   test("dirTag is unique per absolute path, not just basename") {
@@ -188,34 +241,38 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("CsvIngest dead-letter branch routes malformed rows visibly") {
-    val dir = Files.createTempDirectory("graft_csv_dl").toFile
-    val f = new java.io.File(dir, "in.csv")
-    // row 3 has a non-numeric id, row 5 a non-numeric score
-    Files.writeString(f.toPath,
-      "id,name,score\n1,ok,1.5\n2,fine,2.0\nnot_a_number,bad,3.0\n4,also ok,4.5\n5,bad2,NaNope\n")
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("name", StringType),
-      StructField("score", DoubleType)))
-    val (good, bad) = CsvIngest.deadLetterSplit(
-      CsvIngest.readWithCorrupt(spark, f.getAbsolutePath, schema))
-    assert(good.count() === 3)
-    assert(good.columns.toSeq === Seq("id", "name", "score"))
-    val badLines = bad.select("_corrupt_record").collect().map(_.getString(0)).sorted
-    assert(badLines.length === 2)
-    assert(badLines.exists(_.startsWith("not_a_number")))
-    assert(badLines.exists(_.endsWith("NaNope")))
+    // every deadLetterSplit scopes a parse cache in graft.Caches; release
+    // them so they do not outlive this test in the shared session
+    try {
+      val dir = Files.createTempDirectory("graft_csv_dl").toFile
+      val f = new java.io.File(dir, "in.csv")
+      // row 3 has a non-numeric id, row 5 a non-numeric score
+      Files.writeString(f.toPath,
+        "id,name,score\n1,ok,1.5\n2,fine,2.0\nnot_a_number,bad,3.0\n4,also ok,4.5\n5,bad2,NaNope\n")
+      val schema = StructType(Seq(
+        StructField("id", LongType), StructField("name", StringType),
+        StructField("score", DoubleType)))
+      val (good, bad) = CsvIngest.deadLetterSplit(
+        CsvIngest.readWithCorrupt(spark, f.getAbsolutePath, schema))
+      assert(good.count() === 3)
+      assert(good.columns.toSeq === Seq("id", "name", "score"))
+      val badLines = bad.select("_corrupt_record").collect().map(_.getString(0)).sorted
+      assert(badLines.length === 2)
+      assert(badLines.exists(_.startsWith("not_a_number")))
+      assert(badLines.exists(_.endsWith("NaNope")))
 
-    // the reference pipeline shape: one parsed source fanned out to a
-    // clean sink and a quarantine sink
-    val out = Files.createTempDirectory("graft_dl_out").toFile
-    val counts = Pipeline
-      .from(s => CsvIngest.readWithCorrupt(s, f.getAbsolutePath, schema))
-      .branch("clean")(df => CsvIngest.deadLetterSplit(df)._1)(
-        df => Sinks.parquet(df, s"$out/clean"))
-      .branch("quarantine")(df => CsvIngest.deadLetterSplit(df)._2)(
-        df => Sinks.json(df, s"$out/quarantine"))
-      .run(spark)
-    assert(counts("clean") === 3 && counts("quarantine") === 2)
+      // the reference pipeline shape: one parsed source fanned out to a
+      // clean sink and a quarantine sink
+      val out = Files.createTempDirectory("graft_dl_out").toFile
+      val counts = Pipeline
+        .from(s => CsvIngest.readWithCorrupt(s, f.getAbsolutePath, schema))
+        .branch("clean")(df => CsvIngest.deadLetterSplit(df)._1)(
+          df => Sinks.parquet(df, s"$out/clean"))
+        .branch("quarantine")(df => CsvIngest.deadLetterSplit(df)._2)(
+          df => Sinks.json(df, s"$out/quarantine"))
+        .run(spark)
+      assert(counts("clean") === 3 && counts("quarantine") === 2)
+    } finally Caches.releaseAll()
   }
 
   test("etl_rowgroup_audit lists through the Hadoop FS layer (file: URI) and guards empty dirs") {

@@ -22,6 +22,8 @@ WARMUP="q1_agg,window_rolling_corr,join_interval_overlap"
 
 bench() { # bench <outfile> <classdir> <sfdir> [prefix...]
   local out="$1" cls="$2" dir="$3"; shift 3
+  # a leg archives only the sidecar it wrote itself
+  rm -f target/bench_runs.json
   SPARK_GRAFT_SF_DIR="$dir" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_RUNS=3 \
     SPARK_GRAFT_BENCH_WARMUP="$WARMUP" \
     java $AO $JOPTS -cp "$cls:/opt/spark/jars/*" \
