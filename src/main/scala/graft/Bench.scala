@@ -45,7 +45,7 @@ object Bench {
           val exe = cmd.split(' ').headOption.getOrElse("")
           if (exe == "java" || exe.endsWith("/java")) Some(f.getName.toLong -> cmd)
           else None
-        } catch { case _: Throwable => None }
+        } catch { case NonFatal(_) => None }
       }
   }
 
@@ -92,7 +92,7 @@ object Bench {
     // JIT/classloading warmup so startup cost isn't billed to whichever
     // query happens to run first
     try SparkEntry.queries.get("q1_agg").foreach(run)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
     // Per-block warmup (r18, VERDICT r17 Next #3): the block sweep
     // protocol runs each first-token block in a FRESH JVM for
@@ -111,7 +111,7 @@ object Bench {
         try SparkEntry.queries.get(n).foreach { fn =>
           run(fn); Caches.releaseAll(); spark.catalog.clearCache()
         }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
 
@@ -152,7 +152,7 @@ object Bench {
         try Right(Seq.fill(nRuns) {
           val t = run(fn); Caches.releaseAll(); spark.catalog.clearCache(); t
         })
-        catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}") }
+        catch { case NonFatal(e) => Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}") }
       Caches.releaseAll()
       spark.catalog.clearCache()
       // stderr progress line per query (stdout stays the one JSON line)

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Dev tool: Verify restricted to the named queries — fast inner loop for
   * checking one operator against its DuckDB oracle via
@@ -16,7 +17,7 @@ object Probe {
     SparkEntry.queries.filter(kv => names(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[probe] $name failed: ${e.getMessage}")
       }
       Caches.releaseAll()

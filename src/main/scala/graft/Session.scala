@@ -13,6 +13,14 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on (runtime skew/coalesce handling — the same knob a 1000-executor
   *    cluster run would rely on),
   *  - shuffle partitions sized to local cores, not the 200 default.
+  *
+  * Two settings keep local file I/O from starting a process per file
+  * (README, "Fork-free local file I/O"): streaming checkpoints use
+  * Spark's `FileSystem`-based checkpoint manager, whose renames do not
+  * fork `readlink` the way the default `FileContext` one does, and
+  * `file:` is served by [[etl.LocalFs]], which sets permissions without
+  * forking `chmod` when libhadoop is absent. Where libhadoop is loaded
+  * `LocalFs` behaves exactly like Hadoop's `LocalFileSystem`.
   */
 object Session {
   /** @param icuCaseMappings re-enable Spark 4's ICU-backed lower/upper
@@ -61,6 +69,13 @@ object Session {
       // lands in per-JVM scratch, not whatever cwd the caller ran from
       .config("spark.sql.warehouse.dir", etl.TmpDirs.dir("warehouse"))
       .config("spark.ui.enabled", "false")
+      // FileContext renames stat the source and destination as links,
+      // which forks `readlink` twice per checkpoint-file commit without
+      // libhadoop; the FileSystem manager's temp-file rename is atomic
+      // on the local POSIX file system TmpDirs puts checkpoints on
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      .config("spark.hadoop.fs.file.impl", classOf[etl.LocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

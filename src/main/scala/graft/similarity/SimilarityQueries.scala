@@ -534,12 +534,16 @@ object SimilarityQueries {
 
   /** Count-gated row sources for the two regime chains (r19, VERDICT
     * r18 Next #1): DuckDB materializes BOTH chains of an adaptive
-    * union, so each chain now draws its rows from the side of this
-    * gate that selected it — the unselected chain runs over an empty
-    * relation (its O(n·k) centroid cross joins cost ~nothing) and the
-    * selected chain's base filter is identically true, leaving the
-    * output byte-identical. Must be the FIRST items in the WITH (the
-    * chains reference embf/embh).
+    * union, so each chain that reads `embf`/`embh` draws its rows from
+    * the side of this gate that selected it: the unselected chain's
+    * O(n·k) centroid cross joins run over an empty relation and cost
+    * ~nothing, and the selected chain's base filter is identically
+    * true, leaving the output byte-identical. Only those centroid
+    * chains are gated. A chain that reads `embeddings` directly still
+    * scans all of it when unselected — `ann_reranked`'s PQ
+    * `sub`/`bc`/`dt` chains do, gated only at `adc`, so they cost
+    * oracle time on the hier side. Must be the FIRST items in the
+    * WITH (the chains reference embf/embh).
     */
   private val gatedBaseCtes: String =
     s"""$nselCte,

@@ -60,8 +60,7 @@ object StreamTwinQueries {
     // production tune (a per-query deployment choice; results are
     // partition-count-independent, and the cross-batch oracle —
     // cadence, watermarks, state carry, checkpoints — is untouched).
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
     ss
   }
 
