@@ -12,13 +12,6 @@ import scala.util.control.NonFatal
   */
 object Bench {
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
-
   /** Other live java processes on this machine: (pid, cmdline head).
     * Round 7's driver bench was silently 10-100x skewed by a co-resident
     * Spark JVM (BlockManager port contention + CPU steal) and only the
@@ -75,7 +68,7 @@ object Bench {
     val contenders = sparkContenders(javaStart)
     if (contenders.nonEmpty) {
       val who = contenders.map { case (pid, c) => s"pid $pid: ${c.take(100)}" }.mkString("; ")
-      println(s"""{"metric":"total","value":-1,"unit":"sec","error":${jstr(
+      println(s"""{"metric":"total","value":-1,"unit":"sec","error":${Verify.q(
         s"CONTENTION_ABORT: co-resident Spark JVM would skew timings -- $who")},"n_ok":0,"n_err":1,"sf":"$sfDir"}""")
       sys.exit(3)
     }
@@ -132,7 +125,7 @@ object Bench {
     // the frames a query persists, so no run reads another run's
     // in-memory cache. ONE disclosed exception (r18, by design): the
     // materialized bucketed index TABLES (graft_shcap/graft_sigs/
-    // graft_shingles60/..., Bucketing.memoBucketed) are rebuilt from
+    // graft_shingles60/..., Derived.table) are rebuilt from
     // parquet once per JVM and then shared by every family consumer in
     // that JVM — the sweep total pays each build exactly once, charged
     // to the first consuming query; later family queries time
@@ -168,9 +161,9 @@ object Bench {
     // 4-decimal (0.1 ms) formatting keeps the 422-key stdout line ~15 KB
     // — well under the driver's parse/capture buffer (see runs note)
     def f4(t: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, t)
-    val qs = ok.map { case (k, ts) => s"${jstr(k)}:${f4(ts.min)}" }.mkString("{", ",", "}")
-    val rs = ok.map { case (k, ts) => s"${jstr(k)}:${ts.map(f4).mkString("[", ",", "]")}" }.mkString("{", ",", "}")
-    val es = errs.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = ok.map { case (k, ts) => s"${Verify.q(k)}:${f4(ts.min)}" }.mkString("{", ",", "}")
+    val rs = ok.map { case (k, ts) => s"${Verify.q(k)}:${ts.map(f4).mkString("[", ",", "]")}" }.mkString("{", ",", "}")
+    val es = errs.map { case (k, v) => s"${Verify.q(k)}:${Verify.q(v)}" }.mkString("{", ",", "}")
     val total = ok.map { case (_, ts) => ts.min }.sum
 
     // Sentinel readout: other-java counts at start/end plus this

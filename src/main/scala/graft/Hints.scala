@@ -42,25 +42,12 @@ object Hints {
     */
   val BroadcastCharLimit: Long = 1000000000L
 
-  private val counts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Memoized total `n_chars` of `documents` for a data dir. Benign-
-    * race memo (NOT compute-under-CHM-lock — this is a Spark job; the
-    * Tables/Bucketing rule): concurrent first callers may both run the
-    * aggregate, but it is deterministic, so putIfAbsent keeps one
-    * identical value and nobody ever blocks on a bin lock.
-    */
-  def charCount(s: SparkSession, d: String): Long = {
-    val cached = counts.get(d)
-    if (cached != null) cached.longValue()
-    else {
-      val v = Tables.documents(s, d)
+  /** Memoized total `n_chars` of `documents` for a data dir. */
+  def charCount(s: SparkSession, d: String): Long =
+    Derived("doc_chars", d) {
+      Tables.documents(s, d)
         .agg(coalesce(sum("n_chars"), lit(0L))).head().getLong(0)
-      counts.putIfAbsent(d, java.lang.Long.valueOf(v))
-      v
     }
-  }
 
   /** `broadcast(df)` while the dir's corpus text volume is within
     * `limit` chars; `df` unhinted past it.
@@ -85,21 +72,9 @@ object Hints {
     */
   val BroadcastDocLimit: Long = 4000000L
 
-  private val docCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Memoized row count of `documents` for a data dir — benign-race
-    * memo, same discipline as [[charCount]].
-    */
-  def docCount(s: SparkSession, d: String): Long = {
-    val cached = docCounts.get(d)
-    if (cached != null) cached.longValue()
-    else {
-      val v = Tables.documents(s, d).count()
-      docCounts.putIfAbsent(d, java.lang.Long.valueOf(v))
-      v
-    }
-  }
+  /** Memoized row count of `documents` for a data dir. */
+  def docCount(s: SparkSession, d: String): Long =
+    Derived("doc_count", d)(Tables.documents(s, d).count())
 
   /** `broadcast(df)` while the dir's DOCUMENT COUNT is within `limit`
     * rows; `df` unhinted past it (AQE decides from real sizes). The

@@ -14,37 +14,8 @@ import scala.util.control.NonFatal
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = s"$dir/$name"
-    // The repair is a full Spark read+write job and must NOT run inside
-    // ConcurrentHashMap.compute (the Bucketing.memoBucketed rule: CHM
-    // computations must be short and never re-enter the map — a long job
-    // under a bin lock stalls unrelated Tables.apply calls from streaming
-    // micro-batch threads, and deadlocks if the rewrite path ever touches
-    // the memo). computeIfAbsent here only allocates a per-key lock
-    // object; the check-then-repair critical section runs under that
-    // per-key monitor, so concurrent first-accesses of DIFFERENT tables
-    // repair in parallel and a second accessor of the SAME table waits
-    // for one repair instead of launching a duplicate.
-    val lock = layoutLocks.computeIfAbsent(key, _ => new AnyRef)
-    val path = lock.synchronized {
-      val prev = layoutFixed.get(key)
-      if (prev != null) prev
-      else {
-        val p = repairLayout(spark, dir, name)
-        layoutFixed.put(key, p)
-        p
-      }
-    }
-    spark.read.parquet(path)
+    spark.read.parquet(Derived("layout", dir, name)(repairLayout(spark, dir, name)))
   }
-
-  /** Per-JVM repaired-layout memo: `dir/name` → path actually read. */
-  private val layoutFixed =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-key lock objects guarding the repair critical section. */
-  private val layoutLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** Ingest-side LAYOUT REPAIR (r15): a parquet file with ONE row group
     * caps every scan of it at ONE task no matter how many cores or
@@ -145,24 +116,21 @@ object Tables {
         // mis-scaled 1000x here while the DuckDB oracles (epoch_us on
         // real timestamps) stay right. One sampled row per directory
         // (memoized) distinguishes ns-era (~1e18) from µs-era (~1e15).
-        tsNanosChecked.computeIfAbsent(d, _ => {
+        Derived("events_ts_checked", d) {
           raw.select(col("ts")).limit(1).collect().headOption.foreach { r =>
             val v = math.abs(r.getLong(0))
             require(v > 1e16,
               s"events.ts at $d is int64 but |$v| is not nanosecond-era; " +
                 "generator likely wrote epoch micros without a timestamp type")
           }
-          java.lang.Boolean.TRUE
-        })
+          true
+        }
         raw
       case _ => raw.withColumn(
         "ts", unix_micros(col("ts").cast("timestamp")) * 1000L)
     }
   }
 
-  /** Directories whose int64 events.ts magnitude has been validated. */
-  private val tsNanosChecked =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 }

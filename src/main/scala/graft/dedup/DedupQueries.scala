@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{Query, Tables}
+import graft.{Derived, Hints, Query, Tables}
 import graft.functions.{Hashing, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -170,50 +170,16 @@ object DedupQueries {
         col("start"))
   }
 
-  /** Per-dir registry of materialized shared dedup indexes: the
-    * GraphEdges pattern. Both the shingle-hash index (4 consumer
-    * queries) and the MinHash band table (~9 consumers, through
-    * minhashPairs/incremental/decontaminate/ingest) re-derived the
-    * full corpus tokenize + md5 pass per query; production builds a
-    * corpus index ONCE per version and amortizes it, so each is now
-    * written one time per data dir as a bucketed managed table and
-    * every consumer reads the materialized buckets. Deterministic
-    * derivation => identical rows; the DuckDB oracles keep their
-    * self-contained CTE derivations, so the gate still checks the
-    * SEMANTICS, not the cache.
-    */
-  private val builtIdx =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def materialized(s: SparkSession, d: String, kind: String,
-                           key: String, fresh: => DataFrame): DataFrame =
-    materializedN(s, d, kind, key, 8, fresh)
-
-  /** As [[materialized]] with an explicit bucket count — the shingle
-    * indexes size buckets from the corpus (their consumers are heavy
-    * single-pass self-joins whose parallelism is capped by the bucket
-    * count); every per-doc-sized index keeps the measured-fine 8.
-    */
-  private def materializedN(s: SparkSession, d: String, kind: String,
-                            key: String, buckets: Int,
-                            fresh: => DataFrame): DataFrame =
-    graft.etl.Bucketing.memoBucketed(s, builtIdx, s"$kind|$d",
-      s"graft_${kind}_" + graft.etl.Bucketing.dirTag(d), key,
-      buckets = buckets)(fresh)
-
-  /** Corpus doc count, memoized per dir — the input to the shingle
-    * indexes' bucket sizing. A columnless parquet count reads only
-    * row-group metadata; deterministic, so the benign two-thread race
-    * on first call is harmless.
-    */
-  private val docCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def docCount(s: SparkSession, d: String): Long =
-    Option(docCounts.get(d)).map(_.longValue).getOrElse {
-      val n = Tables.documents(s, d).count()
-      docCounts.put(d, n)
-      n
-    }
+  // Shared dedup indexes (Derived.table, the GraphEdges pattern): the
+  // shingle-hash index (4 consumer queries) and the MinHash band table
+  // (~9 consumers, through minhashPairs/incremental/decontaminate/
+  // ingest) re-derived the full corpus tokenize + md5 pass per query;
+  // production builds a corpus index ONCE per version and amortizes it,
+  // so each is written one time per data dir as a bucketed managed
+  // table and every consumer reads the materialized buckets.
+  // Deterministic derivation => identical rows; the DuckDB oracles keep
+  // their self-contained CTE derivations, so the gate still checks the
+  // SEMANTICS, not the cache. Per-doc-sized indexes use 8 buckets.
 
   /** Bucket count for the shingle indexes: ~1,536 docs per bucket —
     * each doc carries ~150-250 distinct 3-gram shingles, so a bucket
@@ -223,7 +189,7 @@ object DedupQueries {
     * [8, defaultParallelism]; gate corpora stay at 8).
     */
   private def shingleBuckets(s: SparkSession, d: String): Int =
-    graft.etl.Bucketing.adaptiveBuckets(s, docCount(s, d),
+    graft.etl.Bucketing.adaptiveBuckets(s, Hints.docCount(s, d),
       rowsPerBucket = 1536)
 
   /** Distinct (doc_id, 60-bit shingle hash) rows — the string-free
@@ -237,11 +203,12 @@ object DedupQueries {
     * (bucketed on the intersection-join key `shh`).
     */
   private[graft] def shingleHash60Rows(s: SparkSession, d: String): DataFrame =
-    materializedN(s, d, "shingles60", "shh", shingleBuckets(s, d),
+    Derived.table(s, "shingles60", d, "shh", shingleBuckets(s, d)) {
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(graft.plans.TextExpressions.shingleHashes60(cleanToks, 3)).as("shh"))
-        .distinct())
+        .distinct()
+    }
 
   /** The df-capped shingle index — [[shingleHash60Rows]] minus the
     * stop shingles present in > 100 docs — MATERIALIZED once per dir
@@ -257,12 +224,12 @@ object DedupQueries {
     * checks the capped-index SEMANTICS, not the cache.
     */
   private[graft] def cappedShingleRows(s: SparkSession, d: String): DataFrame =
-    materializedN(s, d, "shcap", "shh", shingleBuckets(s, d), {
+    Derived.table(s, "shcap", d, "shh", shingleBuckets(s, d)) {
       val raw = shingleHash60Rows(s, d)
       val hot = raw.groupBy(col("shh")).agg(count(lit(1)).as("df"))
         .filter(col("df") > 100).select(col("shh"))
       raw.join(broadcast(hot), Seq("shh"), "left_anti")
-    })
+    }
 
   /** DuckDB twin of `shingleHash60Rows`, ending in `shx0(doc_id, shh)`. */
   private[graft] val shingleHashCte =
@@ -328,7 +295,7 @@ object DedupQueries {
     * Shared by the band table and the estimator-accuracy audit.
     */
   private[graft] def signatures(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "sigs", "doc_id", signaturesFresh(s, d))
+    Derived.table(s, "sigs", d, "doc_id", 8)(signaturesFresh(s, d))
 
   /** The raw signature build behind [[signatures]] — since r18 the
     * public entry is MATERIALIZED once per dir (VERDICT r17 Next #4):
@@ -355,7 +322,7 @@ object DedupQueries {
     * once per dir (bucketed on the band join key `bkey`).
     */
   private[graft] def bandTable(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "bands", "bkey", {
+    Derived.table(s, "bands", d, "bkey", 8) {
       val withSig = signatures(s, d)
       val bandStructs = (0 until 8).map { b =>
         struct(lit(b).as("band_idx"),
@@ -364,7 +331,7 @@ object DedupQueries {
       withSig
         .select(col("doc_id"), explode(array(bandStructs: _*)).as("bd"))
         .select(col("doc_id"), col("bd.band_idx").as("band_idx"), col("bd.bkey").as("bkey"))
-    })
+    }
 
   /** MinHash+LSH candidate pairs (da < db) — the body of
     * `dedup_minhash_lsh`, shared with the clustering query. Candidates
@@ -428,25 +395,24 @@ object DedupQueries {
     * label propagation from the band table per query —
     * dedup_cluster_components, dedup_cluster_stats,
     * dedup_cluster_survivors, and pipeline_dedup_impact's near-dup
-    * stage — at ~9 s each in the r18 sf1 sweep (the 2nd-4th heaviest
-    * dedup keys). Labels are deterministic (min doc_id per component,
-    * independent of iteration schedule), so the memo cannot change any
-    * output; rebuilt from parquet on every JVM start (Overwrite), and
-    * every oracle keeps its self-contained recursive-CTE derivation.
+    * stage — at sf1 min-of-3 6.31 / 5.82 / 5.72 / 8.89 s in
+    * bench_local_r18_sf1_blocks.json and 9.59 / 9.66 / 8.89 s (no
+    * pipeline_dedup_impact) in bench_ab_r18_sf1_close.json. Labels
+    * are deterministic (min doc_id per component, independent of
+    * iteration schedule), so the memo cannot change any output;
+    * rebuilt from parquet on every JVM start (Overwrite), and every
+    * oracle keeps its self-contained recursive-CTE derivation.
     * Constant 8 buckets: per-doc-sized index, consumers aggregate it
     * once (the adaptive rule is for the self-joined shingle indexes).
     */
   private[graft] def clusterLabels(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "cc", "doc_id",
+    Derived.table(s, "cc", d, "doc_id", 8)(
       connectedComponents(componentEdges(s, d)))
 
   /** Candidate-weighted bucket-depth ratio: pairs while
     * Σ c(c-1)/2 ≤ threshold · Σ (c-1).
     */
   private[graft] val PairDepthThreshold = 8L
-
-  private val edgeShape =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The env force parsed once — shared by the memoized decision and
     * the volumes-in-hand entry below.
@@ -474,28 +440,17 @@ object DedupQueries {
       else "star")
 
   private[graft] def decideEdgeShape(s: SparkSession, d: String): String =
-    forcedEdgeShape.getOrElse {
-      // benign-race memo (NOT compute-under-CHM-lock — the probe is a
-      // Spark job; see Tables/Bucketing): concurrent first callers may
-      // both run the aggregate, but it is deterministic in the data,
-      // so putIfAbsent keeps one identical value
-      val cached = edgeShape.get(d)
-      if (cached != null) cached
-      else {
-        val r = graft.Caches.scoped(bandTable(s, d))
-          .groupBy(col("band_idx"), col("bkey"))
-          .agg(count(lit(1)).as("c"))
-          .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L)).as("pairs"),
-            coalesce(sum(expr("c - 1")), lit(0L)).as("stars"))
-          .first()
-        val v =
-          if (r.getLong(0) <= PairDepthThreshold * math.max(1L, r.getLong(1)))
-            "pairs"
-          else "star"
-        edgeShape.putIfAbsent(d, v)
-        v
-      }
-    }
+    forcedEdgeShape.getOrElse(Derived("edge_shape", d) {
+      val r = graft.Caches.scoped(bandTable(s, d))
+        .groupBy(col("band_idx"), col("bkey"))
+        .agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(expr("c * (c - 1) div 2")), lit(0L)).as("pairs"),
+          coalesce(sum(expr("c - 1")), lit(0L)).as("stars"))
+        .first()
+      if (r.getLong(0) <= PairDepthThreshold * math.max(1L, r.getLong(1)))
+        "pairs"
+      else "star"
+    })
 
   private[dedup] def minhashStarEdges(s: SparkSession, d: String): DataFrame = {
     val bands = graft.Caches.scoped(bandTable(s, d))
@@ -577,7 +532,7 @@ object DedupQueries {
     * subset of true cos>=0.3 pairs, recall 0.80 vs the 0.5 floor).
     */
   private def embeddingPairs(s: SparkSession, d: String): DataFrame =
-    materialized(s, d, "embpairs2", "va", embeddingPairsFresh(s, d))
+    Derived.table(s, "embpairs2", d, "va", 8)(embeddingPairsFresh(s, d))
 
   private def embeddingPairsFresh(s: SparkSession, d: String): DataFrame = {
     import graft.functions.VectorFunctions

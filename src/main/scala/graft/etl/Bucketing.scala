@@ -77,49 +77,4 @@ object Bucketing {
     new java.io.File(d).getName.replaceAll("\\W", "_") + "_" +
       digest.take(4).map(b => f"$b%02x").mkString
   }
-
-  /** Memoized bucketed materialization with a PER-SESSION catalog
-    * guard: the memo map is JVM-global, but managed tables live in a
-    * SparkSession's catalog — a fresh session in the same JVM (new
-    * warehouse, new catalog) hits the memo yet lacks the table, so
-    * rebuild instead of failing with TABLE_OR_VIEW_NOT_FOUND (or
-    * silently reading a stale table from a prior warehouse).
-    */
-  // Per-memoKey lock objects. The Spark write must NOT run inside a
-  // ConcurrentHashMap.compute: the CHM contract requires computations
-  // to be short and to never re-enter the map, and a long saveAsTable
-  // job under a bin lock stalls unrelated keys (or deadlocks if the
-  // fresh-body ever touches the same memo). computeIfAbsent here only
-  // allocates a lock object — trivially short — and the whole
-  // check-then-write critical section runs under that per-key monitor.
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-
-  // Bucket-count staleness (r18 ADVICE): a FRESH JVM always rebuilds
-  // (memo miss => writeBucketed regardless of a pre-existing table, in
-  // Overwrite mode), so a warehouse left by an older build or an A/B
-  // leg with a different bucket rule cannot leak its layout across JVM
-  // invocations. The only skip path is a same-JVM memo hit, where the
-  // bucket count is deterministic per (data dir, parallelism); two
-  // SESSIONS with different core counts in one JVM would share the
-  // first session's layout — benign (layout only, never rows) and only
-  // reachable from test harnesses.
-  def memoBucketed(s: org.apache.spark.sql.SparkSession,
-                   memo: java.util.concurrent.ConcurrentHashMap[String, String],
-                   memoKey: String, table: String, key: String,
-                   buckets: Int)(fresh: => DataFrame): DataFrame = {
-    val lock = locks.computeIfAbsent(memoKey, _ => new AnyRef)
-    // Two threads in a fresh session (memo hit, table absent) must not
-    // race concurrent Overwrite saveAsTable calls on the same table
-    // name, so existence check + write are one critical section.
-    val tbl = lock.synchronized {
-      val prev = memo.get(memoKey)
-      val target = if (prev == null) table else prev
-      if (prev == null || !s.catalog.tableExists(target))
-        writeBucketed(fresh, target, key, buckets)
-      memo.put(memoKey, target)
-      target
-    }
-    s.table(tbl)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Derived, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,17 +44,13 @@ object GraphEdges {
     */
   val HubCap = 64
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Canonical co-purchase pairs: (pa, pb, sup) with pa < pb, sup >= 2.
     * First call per dir pays the lineitem self-join and writes the
     * bucketed table; every later call (any graph query, any session on
     * this JVM's catalog) scans the materialized parquet buckets.
     */
   def pairs(s: SparkSession, d: String): DataFrame =
-    graft.etl.Bucketing.memoBucketed(s, built, d,
-      "graft_copurchase_" + graft.etl.Bucketing.dirTag(d), "pa",
-      buckets = 8) {
+    Derived.table(s, "copurchase", d, "pa", buckets = 8) {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey")).distinct()
       // equi-join on the order key: fan-out bounded by per-order line
@@ -119,9 +115,7 @@ object GraphEdges {
     * SEMANTICS of the enumeration, not the cache.
     */
   def triangles(s: SparkSession, d: String): DataFrame =
-    graft.etl.Bucketing.memoBucketed(s, built, "tri|" + d,
-      "graft_triangles_" + graft.etl.Bucketing.dirTag(d), "a",
-      buckets = 8) {
+    Derived.table(s, "triangles", d, "a", buckets = 8) {
       val fwd = fwdByDegree(s, d)
       val wedges = fwd.select(col("s"), col("t").as("v1"), col("dt").as("d1"))
         .join(fwd.select(col("s"), col("t").as("v2"), col("dt").as("d2")),

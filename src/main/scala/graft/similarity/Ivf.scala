@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{Derived, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -112,24 +112,10 @@ object Ivf {
 
   /** Memoized embedding-corpus row count per dir — ONE metadata-only
     * parquet count feeding every data-proportional model-size and
-    * regime decision (graphK, hierKf, decideQuantizer). Benign-race
-    * memo (NOT compute-under-CHM-lock — the count is a Spark job; the
-    * Tables/Bucketing rule): concurrent first callers may both count,
-    * but the value is deterministic, so putIfAbsent keeps one
-    * identical result and nobody blocks on a bin lock.
+    * regime decision (graphK, hierKf, decideQuantizer).
     */
-  def corpusN(s: SparkSession, d: String): Long = {
-    val cached = nCache.get(d)
-    if (cached != null) cached.longValue()
-    else {
-      val n = Tables.embeddings(s, d).count()
-      nCache.putIfAbsent(d, java.lang.Long.valueOf(n))
-      n
-    }
-  }
-
-  private val nCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  def corpusN(s: SparkSession, d: String): Long =
+    Derived("emb_count", d)(Tables.embeddings(s, d).count())
 
   /** DuckDB mirror of `graphK`: one row, column `k`. */
   val graphKSql: String =
@@ -146,20 +132,8 @@ object Ivf {
     * result, the memo cannot change any output.
     */
   def trainedCentroids(s: SparkSession, d: String,
-                       k: Int = kmeansK): Seq[(Long, Seq[Double])] = {
-    // benign-race memo — the training is a multi-job Spark run and
-    // must not execute under a CHM bin lock (see graphK)
-    val key = s"$d#$k"
-    val cached = centCache.get(key)
-    if (cached != null) cached
-    else {
-      val v = trainCentroids(s, d, k)
-      Option(centCache.putIfAbsent(key, v)).getOrElse(v)
-    }
-  }
-
-  private val centCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
+                       k: Int = kmeansK): Seq[(Long, Seq[Double])] =
+    Derived("centroids", d, k.toString)(trainCentroids(s, d, k))
 
   /** Seed sample: deterministic bottom-k by md5(vec_id) — a fixed-size
     * uniform draw whose cost is one TakeOrdered over the corpus; the
@@ -408,22 +382,14 @@ object Ivf {
 
   /** Memoized: does the dir's corpus contain ANY duplicate quantized
     * vector? One map-side-combinable aggregate (count vs distinct-qv
-    * count). Benign-race memo — see corpusN.
+    * count).
     */
-  def hasDupQv(s: SparkSession, d: String): Boolean = {
-    val cached = dupCache.get(d)
-    if (cached != null) cached.booleanValue()
-    else {
+  def hasDupQv(s: SparkSession, d: String): Boolean =
+    Derived("dup_qv", d) {
       val r = quantizedVecs(s, d)
         .agg(count(lit(1)).as("n"), countDistinct(col("qv")).as("nd")).first()
-      val v = r.getLong(0) != r.getLong(1)
-      dupCache.putIfAbsent(d, java.lang.Boolean.valueOf(v))
-      v
+      r.getLong(0) != r.getLong(1)
     }
-  }
-
-  private val dupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
   // ───────────────────────────────────────────────────────────────────
   // HIERARCHICAL (two-level coarse→fine) pair regime — round 16.
@@ -503,15 +469,8 @@ object Ivf {
     * exact s/n centroids). Memoized per dir — a reusable model trained
     * once, like the coarse quantizer.
     */
-  def hierFineCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Double])] = {
-    // benign-race memo — multi-job training must not run under a CHM
-    // bin lock (see graphK); putIfAbsent keeps the first-stored model
-    // so later callers always get the SAME object (spec-pinned)
-    val cached = fineCache.get(d)
-    if (cached != null) cached
-    else Option(fineCache.putIfAbsent(d, trainFineCentroids(s, d)))
-      .getOrElse(fineCache.get(d))
-  }
+  def hierFineCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Double])] =
+    Derived("fine_centroids", d)(trainFineCentroids(s, d))
 
   private def trainFineCentroids(s: SparkSession, d: String): Seq[(Long, Seq[Double])] = {
       val kf = hierKf(s, d)
@@ -536,9 +495,6 @@ object Ivf {
           fid -> rows.sortBy(_._2).map(t => t._3.toDouble / t._4).toSeq
         }
   }
-
-  private val fineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
 
   /** Hierarchical cell assignments `(vec_id, cid, fid)`: each vector
     * under its `hierNprobe` nearest coarse cells × `hierFineNprobe`

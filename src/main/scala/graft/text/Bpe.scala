@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Derived, Tables}
 import graft.functions.TextFunctions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -61,9 +61,6 @@ object Bpe {
   final case class Trained(merges: Seq[(String, String)],
                            wordTokens: Map[String, Int])
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Trained]()
-
   /** Corpus word counts at a given frequency floor (the filter runs
     * DISTRIBUTED, post-agg pre-collect, so the driver only ever holds
     * the floored vocab). `minFreq = 1` gives the unfloored table —
@@ -82,10 +79,7 @@ object Bpe {
     * table — the collect is bounded by the REPEATED vocabulary.
     */
   def trained(s: SparkSession, d: String): Trained =
-    cache.computeIfAbsent(d, dir => train(wordCounts(s, dir)))
-
-  private val ntokBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Derived("bpe", d)(train(wordCounts(s, d)))
 
   /** Per-doc BPE token-budget table, materialized ONCE per data dir
     * (the GraphEdges shared-index pattern): (doc_id, n_words, n_bpe,
@@ -103,9 +97,7 @@ object Bpe {
     * and coalesce to 0, exactly like the oracles' LEFT JOIN wt.
     */
   def ntokTable(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.etl.Bucketing.memoBucketed(s, ntokBuilt, d,
-      "graft_ntok_" + graft.etl.Bucketing.dirTag(d), "doc_id",
-      buckets = 8) {
+    Derived.table(s, "ntok", d, "doc_id", buckets = 8) {
       val tr = trained(s, d)
       val toks = Tables.documents(s, d)
         .select(col("doc_id"),

@@ -151,25 +151,6 @@ class EtlSpec extends AnyFunSuite {
     assert(Bucketing.dirTag("/a/sf0.01").matches("[A-Za-z0-9_]+"))
   }
 
-  test("memoBucketed rebuilds when the memo hits but the catalog lacks the table") {
-    import org.apache.spark.sql.functions._
-    val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    var builds = 0
-    def src = { builds += 1; spark.range(3).select(col("id").as("k")) }
-    val t = "graft_test_memo_guard"
-    assert(Bucketing.memoBucketed(spark, memo, "k1", t, "k", 2)(src).count() === 3)
-    assert(builds === 1)
-    // memo hit + table present: no rebuild
-    assert(Bucketing.memoBucketed(spark, memo, "k1", t, "k", 2)(src).count() === 3)
-    assert(builds === 1)
-    // simulate a fresh-session catalog (table dropped): memo still hits,
-    // guard must rebuild instead of failing with TABLE_OR_VIEW_NOT_FOUND
-    spark.sql(s"DROP TABLE $t")
-    assert(Bucketing.memoBucketed(spark, memo, "k1", t, "k", 2)(src).count() === 3)
-    assert(builds === 2)
-    spark.sql(s"DROP TABLE $t")
-  }
-
   test("bucketed tables join without a shuffle exchange") {
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val customer = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
