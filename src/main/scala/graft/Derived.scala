@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one per-JVM memo for derived artifacts: layout-repaired input
-  * paths, corpus counts, trained quantizers and BPE merges, adaptive
-  * decisions, stream fixture dirs and materialized bucketed index
-  * tables. Every artifact is deterministic in its data dir, so the memo
-  * cannot change an output; it only makes a JVM pay each build once.
-  * Nothing persists across JVMs.
+  * paths, inferred input schemas, corpus counts, trained quantizers
+  * and BPE merges, adaptive decisions, stream fixture dirs and
+  * materialized bucketed index tables. Every artifact is deterministic
+  * in its data dir, so the memo cannot change an output; it only makes
+  * a JVM pay each build once. Nothing persists across JVMs.
   *
   * Keyed by (kind, data dir, params), with one locking rule:
   *  - a hit is a lock-free read (a map `get` and a volatile field);

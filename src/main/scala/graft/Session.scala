@@ -21,6 +21,24 @@ import org.apache.spark.sql.SparkSession
   * `file:` is served by [[etl.LocalFs]], which sets permissions without
   * forking `chmod` when libhadoop is absent. Where libhadoop is loaded
   * `LocalFs` behaves exactly like Hadoop's `LocalFileSystem`.
+  *
+  * Generated code is compiled once per JVM (README, "Generated code
+  * compiled once per JVM"). Spark's `CodeGenerator` caches compiled
+  * classes under the key (class loader of the compiling thread, source
+  * text). With `spark.sql.artifact.isolation.enabled` on (Spark's
+  * default), every job carries its session's artifact id and an
+  * executor gives each id its own class loader, so a task that compiles
+  * in a new session misses the cache even for byte-identical source.
+  * graft opens new sessions on every streaming twin run
+  * (`StreamTwinQueries.twinSession`, and the streaming engine clones
+  * that session again), and it adds no per-session jars or artifacts,
+  * so isolation is off. Measured at local[4] on the sf0.001 test data
+  * (`CodegenReuseSpec`): a second `stream_sessionize_mb` run compiled
+  * 16 classes with isolation on and 0 with it off, and a shuffle query
+  * re-run in a second new session 5 and 0. The entries of dead
+  * sessions' class loaders also pushed other queries' classes out of
+  * the 100-entry cache (`spark.sql.codegen.cache.maxEntries`, left at
+  * its default).
   */
 object Session {
   /** @param icuCaseMappings re-enable Spark 4's ICU-backed lower/upper
@@ -76,6 +94,9 @@ object Session {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       .config("spark.hadoop.fs.file.impl", classOf[etl.LocalFs].getName)
+      // one class loader for every session's tasks, so compiled
+      // generated classes are shared across sessions (scaladoc above)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

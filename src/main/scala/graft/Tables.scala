@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
@@ -14,7 +14,18 @@ import scala.util.control.NonFatal
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.read.parquet(Derived("layout", dir, name)(repairLayout(spark, dir, name)))
+    val path = Derived("layout", dir, name)(repairLayout(spark, dir, name))
+    spark.read.schema(schema(spark, path)).parquet(path)
+  }
+
+  /** The schema Spark infers for the parquet at `path`, inferred once
+    * per JVM: inference runs a one-task footer job, and the inputs do
+    * not change under a running JVM. The inferred `ts` type depends on
+    * `nanosAsLong` (see [[Session]]), so its value is part of the key.
+    */
+  private[graft] def schema(s: SparkSession, path: String): StructType = {
+    val nanosAsLong = s.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    Derived("schema", path, nanosAsLong)(s.read.parquet(path).schema)
   }
 
   /** Ingest-side LAYOUT REPAIR (r15): a parquet file with ONE row group
