@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * result is LAZY, so the query itself can never unpersist — only the
   * caller knows when materialization finished. This registry makes that
   * contract explicit: queries persist through `scoped`, and the caller
-  * (Bench, Verify, or any library user composing these frames) calls
+  * (Verify, graftbench, or any library user composing these frames) calls
   * `releaseAll()` once the results are materialized. Without it a
   * long-lived session leaks executor storage one query at a time.
   */

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Single configuration point for every entry main (Verify, Bench, tests).
+/** Single configuration point for every session graft starts (Verify,
+  * graftbench, tests).
   *
   * The oracle-parity-critical settings live here so they cannot drift
-  * between the correctness gate and the bench:
+  * between the correctness gate and the benchmark:
   *  - UTC session timezone (timestamps hash identically vs DuckDB),
   *  - `nanosAsLong` (when events.parquet stores timestamp[ns], Spark reads
   *    the raw int64 nanos — exactly DuckDB's `epoch_ns(ts)`; either way

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,6 +12,16 @@ object Verify {
     // passes 2 args and dumps everything)
     val only = args.drop(2).headOption.map(_.split(",").toSeq)
     val spark = Session.local()
+    dump(spark, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  /** Writes every registered query whose name starts with one of `only`'s
+    * prefixes (all of them when `only` is None) to `outDir/<name>`, and
+    * the full oracle map to `outDir/oracle_sql.json`. Leaves `spark`
+    * running: `Session.local()` is `getOrCreate`, so the caller owns it. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           only: Option[Seq[String]]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
@@ -27,8 +38,7 @@ object Verify {
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json): Unit
   }
 
   /** `s` as a quoted JSON string: escapes the quote, the backslash and

@@ -414,9 +414,7 @@ object DedupQueries {
     */
   private[graft] val PairDepthThreshold = 8L
 
-  /** The env force parsed once — shared by the memoized decision and
-    * the volumes-in-hand entry below.
-    */
+  /** The env force, checked before the memoized decision. */
   private def forcedEdgeShape: Option[String] =
     sys.env.get("SPARK_GRAFT_COMPONENT_EDGES").map {
       // validate loudly: a typo'd forced shape would otherwise run
@@ -425,19 +423,6 @@ object DedupQueries {
       case other => sys.error(
         s"SPARK_GRAFT_COMPONENT_EDGES must be star|pairs, got '$other'")
     }
-
-  /** The pairs↔star decision from ALREADY-COMPUTED band volumes — for
-    * callers that compute the Σc(c−1)/2 / Σ(c−1) aggregate themselves
-    * (GrowthProbe's `edges` family publishes it in its artifact, so it
-    * derives the decision from the same pass instead of paying
-    * [[decideEdgeShape]]'s second full band-table aggregate — r17
-    * ADVICE). Same env force, same threshold rule.
-    */
-  private[graft] def decideEdgeShapeFromVolumes(pairVol: Long,
-                                                starVol: Long): String =
-    forcedEdgeShape.getOrElse(
-      if (pairVol <= PairDepthThreshold * math.max(1L, starVol)) "pairs"
-      else "star")
 
   private[graft] def decideEdgeShape(s: SparkSession, d: String): String =
     forcedEdgeShape.getOrElse(Derived("edge_shape", d) {

@@ -4,8 +4,9 @@ package graft.etl
   *
   * Paths are stable WITHIN a JVM (a warm-up and a timed bench run of the
   * same query overwrite one directory instead of accumulating) but unique
-  * ACROSS JVMs, so a Bench and a Verify running concurrently on the same
-  * sf-dir can't race on each other's output.
+  * ACROSS JVMs, so two graft JVMs running concurrently on the same
+  * sf-dir (a Verify and a test suite, say) can't race on each other's
+  * output.
   */
 object TmpDirs {
   private lazy val base: String = {
@@ -26,9 +27,7 @@ object TmpDirs {
     // largest observed per-JVM scratch footprint: repaired sf1-scale
     // tables + sliced streaming fixtures + sink outputs); otherwise use
     // java.io.tmpdir. Overridable for ops via SPARK_GRAFT_SCRATCH_MIN_GB.
-    val budgetBytes =
-      sys.env.get("SPARK_GRAFT_SCRATCH_MIN_GB").flatMap(_.toLongOption)
-        .getOrElse(8L) << 30
+    val budgetBytes = scratchMinGb(sys.env.get("SPARK_GRAFT_SCRATCH_MIN_GB")) << 30
     val shm = new java.io.File("/dev/shm")
     val root =
       if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= budgetBytes)
@@ -41,6 +40,16 @@ object TmpDirs {
     // /tmp by one warehouse per JVM forever
     Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(d)))
     d.getAbsolutePath
+  }
+
+  /** The shm scratch budget in GiB: 8 when unset, else `raw` as a
+    * positive whole number of GiB. Anything else fails naming the
+    * variable: "8g" or "abc" must not silently become the default, and
+    * 0 or a negative budget would make every shm check pass.
+    */
+  private[etl] def scratchMinGb(raw: Option[String]): Long = raw.fold(8L) { v =>
+    v.trim.toLongOption.filter(g => g > 0 && g <= (Long.MaxValue >> 30)).getOrElse(
+      sys.error(s"SPARK_GRAFT_SCRATCH_MIN_GB must be a positive integer (GiB), got '$v'"))
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -15,9 +15,10 @@
 # dedup_embedding(+_hier), text_bitext_mine, vec_cluster_components,
 # vec_knn_graph, vec_knn_hubness (adaptiveCandCteSql consumers).
 #
-# One Spark JVM at a time; never compile while this runs.
+# One Spark JVM at a time; never compile while this runs. Run from any
+# directory; the report is written to target/gate5k_verify.txt.
 set -u
-cd /root/repo
+cd "$(dirname "${BASH_SOURCE[0]}")/.." || exit 1
 AO="--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED --add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED --add-opens java.base/java.net=ALL-UNNAMED --add-opens java.base/java.nio=ALL-UNNAMED --add-opens java.base/java.util=ALL-UNNAMED --add-opens java.base/java.util.concurrent=ALL-UNNAMED --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens java.base/sun.nio.ch=ALL-UNNAMED --add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 JOPTS="-Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx24g -XX:ReservedCodeCacheSize=512m"
 
@@ -27,7 +28,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-out = "/root/repo/target/sfgate5k"
+out = "target/sfgate5k"
 os.makedirs(out, exist_ok=True)
 n = 5120  # just past Ivf.HierSwitchN = 4096 -> every adaptive gate flips hier
 rng = np.random.default_rng(5120)
@@ -55,5 +56,5 @@ rc=$?
 echo "verify rc=$rc"
 if [ $rc -ne 0 ]; then echo "VERIFY FAILED"; exit $rc; fi
 python3 tools/local_verify.py target/sfgate5k target/verify_gate5k \
-  | tee gate5k_verify_r18.txt
+  | tee target/gate5k_verify.txt
 echo ALL_DONE

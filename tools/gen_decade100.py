@@ -3,9 +3,10 @@
 
 The pairs<->star edge-shape threshold (pair volume <= 8x star volume,
 DedupQueries.PairDepthThreshold) was set from three corpora; this
-writes the fourth point of the dup-chain family so
-`graft.GrowthProbe edges` can confirm the regimes still separate one
-decade further:
+writes the fourth point of the dup-chain family, on which the GrowthProbe
+main's `edges` family confirmed the regimes still separate one decade
+further. GrowthProbe is retired; its measurement remains in
+growth_edges_r17.json:
 
 - target/sfdx100/documents.parquet — 5M docs (1000x gate, 100x sf1),
   the same closed-30-word-vocab + ~4.8% near-dup / ~0.2% exact-dup

@@ -15,7 +15,8 @@ each side via SPARK_GRAFT_VEC_QUANTIZER):
 
 Same unit-norm near-uniform 10-label recipe as gen_decade.py /
 gen_vec_saturate.py, seeds pinned. Bench/diagnostic input only —
-NEVER an oracle table.
+NEVER an oracle table. The GrowthProbe main that measured these is
+retired; its artifacts (growth_*.json) remain.
 
 Usage: python3 tools/gen_vec_ladder_r17.py
 """
