@@ -42,16 +42,8 @@ import org.apache.spark.sql.SparkSession
   * its default).
   */
 object Session {
-  /** @param icuCaseMappings re-enable Spark 4's ICU-backed lower/upper
-    *   (Turkish dotted-I, final sigma, ligatures) for callers whose
-    *   corpus needs full Unicode case semantics more than it needs to
-    *   dodge the ICU static-init tax documented below. Default false =
-    *   Spark 3.x JVM simple case mapping, byte-identical on ASCII-ish
-    *   corpora and to DuckDB's lower().
-    */
   def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-              Runtime.getRuntime.availableProcessors().toString),
-            icuCaseMappings: Boolean = false): SparkSession = {
+              Runtime.getRuntime.availableProcessors().toString)): SparkSession = {
     val s = SparkSession
       .builder()
       .withExtensions(new plans.GraftExtensions)
@@ -68,11 +60,12 @@ object Session {
       // when the compiler is busy/starved (exactly the state of a busy
       // executor mid-job). JVM simple case mapping (the Spark 3.x
       // behavior) is byte-identical on this corpus and matches DuckDB's
-      // lower(); flip back via the icuCaseMappings builder flag if
-      // Turkish-dotted-I / final-sigma semantics matter more than the
-      // init tax. Trade-off also surfaced in README ("Unicode case
+      // lower(). It is a runtime SQL conf: a caller whose corpus needs
+      // Turkish-dotted-I / final-sigma semantics more than it needs to
+      // dodge the init tax sets it back to true on the returned
+      // session. Trade-off also surfaced in README ("Unicode case
       // semantics").
-      .config("spark.sql.icu.caseMappings.enabled", icuCaseMappings.toString)
+      .config("spark.sql.icu.caseMappings.enabled", "false")
       // HotSpot refuses to JIT methods over 8000 bytecodes
       // (-XX:DontCompileHugeMethods), but Spark's default
       // hugeMethodLimit (65535) happily EMITS them — the stage then

@@ -48,10 +48,10 @@ object Tables {
     * unchanged — the DuckDB oracles keep reading the original files.
     * CAVEAT (floating point): the repair turns a 1-partition scan into
     * up to 8, which reorders partial-aggregate combination, so any
-    * query summing DOUBLES can drift by ulps between repair-on and
-    * repair-off (the SPARK_GRAFT_NO_LAYOUT_REPAIR A/B) or versus
-    * pre-repair rounds' hashes; the A/B validation for such queries
-    * compares row sets with a numeric tolerance, not bit-exact hashes.
+    * query summing DOUBLES can drift by ulps between a repaired and a
+    * raw read or versus pre-repair rounds' hashes; comparing such
+    * queries across the two takes a numeric tolerance, not bit-exact
+    * hashes.
     * Multi-row-group files (the sf1 stress corpora),
     * directory outputs, and small tables pass through untouched, and
     * a non-fatal preflight/rewrite failure falls back to the raw path
@@ -59,10 +59,6 @@ object Tables {
     */
   private def repairLayout(s: SparkSession, dir: String, name: String): String = {
     val src = s"$dir/$name.parquet"
-    // operational opt-out (also the A/B switch the repair's own
-    // validation uses: same queries with and without repair must
-    // produce identical row sets)
-    if (sys.env.contains("SPARK_GRAFT_NO_LAYOUT_REPAIR")) return src
     try {
       val p = new org.apache.hadoop.fs.Path(src)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)

@@ -368,7 +368,7 @@ object DedupQueries {
     * DATA (r16 — closing VERDICT r15 #5): the star rewrite wins
     * exactly where bucket depth makes C(c,2) explode and LOSES where
     * buckets are shallow, both measured at HEAD
-    * (bench_adjudication_r16.json starab_*): sfdx10 (684-deep
+    * (artifacts/r16/bench_adjudication_r16.json starab_*): sfdx10 (684-deep
     * dup-chain buckets) star 14.6/15.2/15.3 s vs pairs 49.8/25.6/25.2
     * — 1.7-3.4× for star; sf1 + sfov10 (shallow buckets) pairs
     * 6.5-7.1 / 9.4-10.8 s vs star 8.0-8.2 / 10.4-12.2 — star's extra
@@ -379,8 +379,7 @@ object DedupQueries {
     * depth — stays ≤ PairDepthThreshold (both measured regimes sit
     * FAR from the boundary: ~1-2 shallow, ≥50 deep). Components are
     * provably identical either way (DedupSpec property), so this is a
-    * physical-plan choice, never semantics. `SPARK_GRAFT_COMPONENT_EDGES`
-    * (star|pairs) forces a shape for A/B runs.
+    * physical-plan choice, never semantics.
     */
   private[dedup] def componentEdges(s: SparkSession, d: String): DataFrame =
     decideEdgeShape(s, d) match {
@@ -396,8 +395,8 @@ object DedupQueries {
     * dedup_cluster_components, dedup_cluster_stats,
     * dedup_cluster_survivors, and pipeline_dedup_impact's near-dup
     * stage — at sf1 min-of-3 6.31 / 5.82 / 5.72 / 8.89 s in
-    * bench_local_r18_sf1_blocks.json and 9.59 / 9.66 / 8.89 s (no
-    * pipeline_dedup_impact) in bench_ab_r18_sf1_close.json. Labels
+    * artifacts/r18/bench_local_r18_sf1_blocks.json and 9.59 / 9.66 / 8.89 s (no
+    * pipeline_dedup_impact) in artifacts/r18/bench_ab_r18_sf1_close.json. Labels
     * are deterministic (min doc_id per component, independent of
     * iteration schedule), so the memo cannot change any output;
     * rebuilt from parquet on every JVM start (Overwrite), and every
@@ -414,18 +413,8 @@ object DedupQueries {
     */
   private[graft] val PairDepthThreshold = 8L
 
-  /** The env force, checked before the memoized decision. */
-  private def forcedEdgeShape: Option[String] =
-    sys.env.get("SPARK_GRAFT_COMPONENT_EDGES").map {
-      // validate loudly: a typo'd forced shape would otherwise run
-      // star on BOTH A/B legs and record a vacuous measurement
-      case v @ ("star" | "pairs") => v
-      case other => sys.error(
-        s"SPARK_GRAFT_COMPONENT_EDGES must be star|pairs, got '$other'")
-    }
-
   private[graft] def decideEdgeShape(s: SparkSession, d: String): String =
-    forcedEdgeShape.getOrElse(Derived("edge_shape", d) {
+    Derived("edge_shape", d) {
       val r = graft.Caches.scoped(bandTable(s, d))
         .groupBy(col("band_idx"), col("bkey"))
         .agg(count(lit(1)).as("c"))
@@ -435,7 +424,7 @@ object DedupQueries {
       if (r.getLong(0) <= PairDepthThreshold * math.max(1L, r.getLong(1)))
         "pairs"
       else "star"
-    })
+    }
 
   private[dedup] def minhashStarEdges(s: SparkSession, d: String): DataFrame = {
     val bands = graft.Caches.scoped(bandTable(s, d))
@@ -451,53 +440,50 @@ object DedupQueries {
       .distinct()
   }
 
+  private val CcMaxIter = 20
+
   /** Connected components over an undirected candidate-pair edge list:
     * iterative min-label propagation (one equi-join + map-side-combinable
     * MIN per step — the Pregel step GraphX would run) plus a pointer jump
     * (lbl <- lbl(lbl)) for O(log diameter) convergence. Each iteration is
     * checkpointed — the plan would otherwise grow 4x per iteration and
-    * drown the optimizer. `checkpointDir = None` uses localCheckpoint
-    * (executor-stored blocks — fast, but lost with an executor); cluster
-    * runs pass a reliable dir (HDFS/object store) for fault tolerance.
+    * drown the optimizer; localCheckpoint keeps the blocks on the
+    * executors (fast, but lost with an executor).
     * Throws rather than returning silently-unconverged labels if the
     * iteration cap is hit (pointer jumping makes 20 iterations enough for
     * any component diameter < 2^20 — hitting the cap means something is
     * structurally wrong, not that the answer is "close").
     */
-  def connectedComponents(pairs: DataFrame, checkpointDir: Option[String] = None,
-                          maxIter: Int = 20): DataFrame = {
-    def ckpt(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        df.sparkSession.sparkContext.setCheckpointDir(dir)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-    val edges = ckpt(pairs.select(col("da").as("src"), col("db").as("dst"))
-      .unionAll(pairs.select(col("db").as("src"), col("da").as("dst"))))
-    var labels = ckpt(edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")))
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
+      .unionAll(pairs.select(col("db").as("src"), col("da").as("dst")))
+      .localCheckpoint()
+    var labels = edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")).localCheckpoint()
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < CcMaxIter) {
       val neighborMin = edges.join(labels, col("dst") === col("node"))
         .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
-      val stepped = ckpt(labels.join(neighborMin, col("node") === col("src"), "left")
+      val stepped = labels.join(neighborMin, col("node") === col("src"), "left")
         .select(col("node"), col("lbl").as("old"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl1")))
+          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl1"))
+        .localCheckpoint()
       // pointer jump: labels only ever shrink (lbl(x) <= x), so
       // lbl(lbl(x)) is a reachable, <= label — valid and faster
       val parents = stepped.select(col("node").as("pnode"), col("lbl1").as("plbl"))
-      val next = ckpt(stepped.join(parents, col("lbl1") === col("pnode"), "left")
+      val next = stepped.join(parents, col("lbl1") === col("pnode"), "left")
         .select(col("node"), col("old"),
-          coalesce(col("plbl"), col("lbl1")).as("lbl")))
+          coalesce(col("plbl"), col("lbl1")).as("lbl"))
+        .localCheckpoint()
       converged = next.filter(col("lbl") =!= col("old")).isEmpty
       labels = next.select(col("node"), col("lbl"))
       iter += 1
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents: not converged after $maxIter iterations — " +
-          "labels would be silently wrong; raise maxIter or inspect the edge list")
+        s"connectedComponents: not converged after $CcMaxIter iterations — " +
+          "labels would be silently wrong; inspect the edge list")
     labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id"))
   }
 

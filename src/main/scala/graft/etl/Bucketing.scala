@@ -38,24 +38,13 @@ object Bucketing {
     * measured-fine constant 8. Floor 8 (a tiny local[2] probe session
     * must not write a 2-bucket index a later 32-core session would be
     * stuck with); cap at `defaultParallelism` (more buckets than slots
-    * buys nothing locally and shrinks files). Production at 100 TB
-    * wants buckets >> slots so each bucket file lands in the
-    * 128 MB-1 GB range (guide §6) — the SPARK_GRAFT_INDEX_BUCKETS env
-    * override sets that explicitly; local defaults keep the driver's
-    * bench comparable at every core count it runs.
+    * buys nothing locally and shrinks files).
     */
   def adaptiveBuckets(s: org.apache.spark.sql.SparkSession,
-                      estRows: Long, rowsPerBucket: Long): Int =
-    sys.env.get("SPARK_GRAFT_INDEX_BUCKETS")
-      // fail fast on non-positive too: 0/-1 would otherwise surface
-      // later as an opaque saveAsTable error AFTER the expensive fresh
-      // frame was built (r18 ADVICE)
-      .map(v => scala.util.Try(v.trim.toInt).toOption.filter(_ > 0).getOrElse(
-        sys.error(s"SPARK_GRAFT_INDEX_BUCKETS must be a positive integer, got '$v'")))
-      .getOrElse {
-        val byData = math.ceil(estRows.toDouble / rowsPerBucket).toInt
-        math.max(8, math.min(s.sparkContext.defaultParallelism, byData))
-      }
+                      estRows: Long, rowsPerBucket: Long): Int = {
+    val byData = math.ceil(estRows.toDouble / rowsPerBucket).toInt
+    math.max(8, math.min(s.sparkContext.defaultParallelism, byData))
+  }
 
   def writeBucketed(df: DataFrame, table: String, key: String,
                     buckets: Int, sorted: Boolean = true): Unit = {

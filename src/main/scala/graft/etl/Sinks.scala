@@ -68,11 +68,7 @@ object Sinks {
       val _ = bak.renameTo(dst) // best-effort roll back
       throw new IllegalStateException(s"cannot promote $tmp")
     }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      val _ = f.delete()
-    }
-    rm(bak)
+    TmpDirs.deleteRecursively(bak)
     (before, dataFiles(path).length)
   }
 

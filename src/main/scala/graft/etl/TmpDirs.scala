@@ -52,7 +52,11 @@ object TmpDirs {
       sys.error(s"SPARK_GRAFT_SCRATCH_MIN_GB must be a positive integer (GiB), got '$v'"))
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  /** Deletes `f` and everything under it, best effort: a directory
+    * that cannot be listed (`listFiles` returns null) is skipped, not
+    * thrown on.
+    */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRecursively)
     f.delete(): Unit

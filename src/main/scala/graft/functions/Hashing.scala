@@ -24,20 +24,12 @@ object Hashing {
   def md5Long32(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast(LongType)
 
-  /** Salted 60-bit hash: one independent hash family member per salt.
-    * Used as the "permutation" of MinHash (min over salted hashes is an
-    * unbiased Jaccard estimator, same as affine permutations).
+  /** Salted 60-bit hash: one independent hash family member per salt
+    * (one md5 per (salt, value); the MinHash signatures use the affine
+    * family below, which pays one md5 per element for all salts).
     */
   def saltedHash60(salt: Int, c: Column): Column =
     md5Long60(concat(lit(s"${salt}_"), c))
-
-  /** MinHash signature entry i over an array<string> column.
-    * (Simple salted form — one md5 per (salt, element). Prefer
-    * `minHashAffine` over a pre-hashed array when computing many
-    * signature entries: one md5 per element total.)
-    */
-  def minHash(salt: Int, shingles: Column): Column =
-    array_min(transform(shingles, s => saltedHash60(salt, s)))
 
   /** Mersenne-ish prime modulus for the affine MinHash family. */
   val minHashP: Long = 2147483647L

@@ -297,11 +297,11 @@ object Ivf {
     */
   def candidatePairs(s: SparkSession, d: String,
                      cap: Long = CellCap): DataFrame =
-    candidatePairsImpl(s, d, cap, collapseDecision(s, d))
+    candidatePairsImpl(s, d, cap, hasDupQv(s, d))
 
   /** [[candidatePairs]] with the duplicate-collapse choice explicit —
     * the spec pins skip ≡ collapse on the same corpus (the two paths
-    * are provably output-identical; see `collapseDecision`).
+    * are provably output-identical; see [[hasDupQv]]).
     */
   private[graft] def candidatePairsImpl(s: SparkSession, d: String,
                                         cap: Long,
@@ -357,32 +357,20 @@ object Ivf {
     }
   }
 
-  /** Run the duplicate-collapse machinery for a dir? (r17, VERDICT
-    * r16 #3: the guarded pair path paid ~2× on corpora with no
-    * duplicates to collapse — the window is a full-corpus sort on a
-    * 64-long array key and the re-expansion is two joins + a wider
-    * distinct, all identity work when every qv is unique.) ONE
-    * memoized aggregate decides: any duplicate quantized vector
-    * anywhere ⇒ collapse (the spike protection stays armed exactly
-    * when it can bind); zero duplicates ⇒ provably identical output
-    * without the machinery. `SPARK_GRAFT_VEC_DUP_COLLAPSE`
-    * (always|skip) forces a side for A/B runs — SAFE either way
-    * (unlike the quantizer force): both paths emit the same pair set,
-    * `skip` is only also CORRECT when the corpus truly has no dup qv
-    * (on a spiked corpus it re-opens the O(m²) cell the collapse
-    * exists to prevent — a perf force, never a semantics one).
-    */
-  private def collapseDecision(s: SparkSession, d: String): Boolean =
-    sys.env.get("SPARK_GRAFT_VEC_DUP_COLLAPSE").map {
-      case "always" => true
-      case "skip"   => false
-      case other => sys.error(
-        s"SPARK_GRAFT_VEC_DUP_COLLAPSE must be always|skip, got '$other'")
-    }.getOrElse(hasDupQv(s, d))
-
   /** Memoized: does the dir's corpus contain ANY duplicate quantized
     * vector? One map-side-combinable aggregate (count vs distinct-qv
-    * count).
+    * count). It decides whether [[candidatePairs]] and
+    * [[hierCandidatePairs]] run the duplicate-collapse machinery (r17,
+    * VERDICT r16 #3: the guarded pair path paid ~2× on corpora with no
+    * duplicates to collapse — the window is a full-corpus sort on a
+    * 64-long array key and the re-expansion is two joins + a wider
+    * distinct, all identity work when every qv is unique). Any
+    * duplicate qv anywhere ⇒ collapse, so the spike protection stays
+    * armed exactly when it can bind. Zero duplicates ⇒ skip, which is
+    * output-identical: with every qv unique each group is one vector,
+    * the collapse window maps each vec_id to itself and the
+    * re-expansion joins are identities, so both paths emit the same
+    * pair set (pinned in IvfAdaptiveSpec for both quantizers).
     */
   def hasDupQv(s: SparkSession, d: String): Boolean =
     Derived("dup_qv", d) {
@@ -577,7 +565,7 @@ object Ivf {
     */
   def hierCandidatePairs(s: SparkSession, d: String,
                          cap: Long = HierCellCap): DataFrame =
-    hierCandidatePairsImpl(s, d, cap, collapseDecision(s, d))
+    hierCandidatePairsImpl(s, d, cap, hasDupQv(s, d))
 
   /** [[hierCandidatePairs]] with the duplicate-collapse choice
     * explicit — see `candidatePairsImpl`.
@@ -766,8 +754,8 @@ object Ivf {
   // the proportional design exists to prevent.
   //
   // The switch point is MEASURED, not guessed — the r17 consumer-level
-  // ladder (growth_consumer_r17/, vec_knn_graph warm min-of-runs,
-  // forced legs):
+  // ladder (artifacts/r17/growth_consumer_r17.json, vec_knn_graph warm
+  // min-of-runs, forced legs):
   //     n        flat      hier
   //     500      1.12 s    1.36 s   (flat wins; training overhead)
   //     2,000    1.37      1.36     (tie)
@@ -790,19 +778,11 @@ object Ivf {
 
   /** The pair-regime quantizer for a data dir: `"flat"` (one-level
     * proportional-k) or `"hier"` (two-level coarse→fine), decided
-    * from the memoized corpus count. `SPARK_GRAFT_VEC_QUANTIZER`
-    * forces a side for A/B runs — BENCH-ONLY (like
-    * SPARK_GRAFT_NO_LAYOUT_REPAIR): the candidate sets differ between
-    * quantizers, so a forced run does not match the adaptive oracle.
+    * from the memoized corpus count. The candidate sets differ between
+    * quantizers; the oracle replays this same decision.
     */
   def decideQuantizer(s: SparkSession, d: String): String =
-    sys.env.get("SPARK_GRAFT_VEC_QUANTIZER").map {
-      // validate loudly — a typo'd force would run flat on both A/B
-      // legs and record a vacuous measurement (decideEdgeShape rule)
-      case v @ ("flat" | "hier") => v
-      case other => sys.error(
-        s"SPARK_GRAFT_VEC_QUANTIZER must be flat|hier, got '$other'")
-    }.getOrElse(if (corpusN(s, d) > HierSwitchN) "hier" else "flat")
+    if (corpusN(s, d) > HierSwitchN) "hier" else "flat"
 
   /** The ONE adaptive pair generator every embedding-pair consumer
     * calls: flat or hierarchical candidates per [[decideQuantizer]].

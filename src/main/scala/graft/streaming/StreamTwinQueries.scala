@@ -186,14 +186,8 @@ object StreamTwinQueries {
     // name and lets the sink rows be GC'd once the caller lets go.
     val df = s.table(name)
     s.catalog.dropTempView(name)
-    deleteRecursively(new java.io.File(ckpt))
+    graft.etl.TmpDirs.deleteRecursively(new java.io.File(ckpt))
     df
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** The registered twins: every body runs against a [[twinSession]]

@@ -71,6 +71,23 @@ class QueriesSmokeSpec extends AnyFunSuite {
       s"README says $twinCount stream_* entries; registry has $streamEntries")
   }
 
+  test("src/main reads exactly two SPARK_GRAFT_* settings (the deployment knobs)") {
+    // core count and the shm scratch budget are the only environment
+    // settings; a leg force or a scaladoc naming one must not creep back
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."))
+      .resolve("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found")
+    val names = {
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        "SPARK_GRAFT_[A-Z_]+".r.findAllIn(
+          new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).toSeq
+      }.toSet finally files.close()
+    }
+    assert(names === Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SCRATCH_MIN_GB"))
+  }
+
   test("no query key registers twice (shadowed implementations fail the build)") {
     // modules is the pre-Map Seq: a key registered in two places would
     // silently resolve to whichever folds in last — exactly how two

@@ -57,8 +57,8 @@ class TablesLayoutSpec extends AnyFunSuite {
       case _ =>
     }
     assert(ranges.head._1 === 0 && ranges.last._2 === 119999)
-    // the A/B contract (SPARK_GRAFT_NO_LAYOUT_REPAIR methodology note,
-    // pinned as a spec): repaired-read row set ≡ raw-read row set
+    // the repair's contract, pinned as a spec: repaired-read row set ≡
+    // raw-read row set
     val raw = spark.read.parquet(new java.io.File(dir, "t.parquet").getAbsolutePath)
     assert(df.exceptAll(raw).isEmpty && raw.exceptAll(df).isEmpty,
       "repaired scan must return exactly the raw file's row multiset")

@@ -83,24 +83,58 @@ class DedupSpec extends AnyFunSuite {
     assert(n === 4) // 6 tokens -> 4 trigrams, all distinct
   }
 
+  /** The sfdx100 regime (gen_decade100.py) in miniature: near-dups are
+    * chains of single-token mutations off EARLIER docs, so band buckets
+    * deepen with corpus size without any doc being an exact copy. 10
+    * base lineages, 300 mutants — the dup-DENSE deep regime (sfdx100
+    * has 5% plants over 5M docs, so lineages hold thousands of members;
+    * the miniature needs the same members-per-lineage shape, not the
+    * same plant rate). Written once per suite.
+    */
+  private lazy val mutationChainDir: String = {
+    val rnd = new scala.util.Random(17)
+    val vocab = Vector("spark", "window", "merge", "table", "column",
+      "vector", "stream", "value", "data", "small", "join", "filter")
+    def doc() = Seq.fill(40)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val texts = scala.collection.mutable.ArrayBuffer[String]()
+    for (_ <- 0 until 10) texts += doc()
+    for (_ <- 0 until 300) {
+      val toks = texts(rnd.nextInt(texts.size)).split(" ")
+      toks(rnd.nextInt(toks.length)) = "dup"
+      texts += toks.mkString(" ")
+    }
+    val dir = graft.etl.TmpDirs.dir("edge_chain_spec")
+    import spark.implicits._
+    texts.toSeq.zipWithIndex.map { case (t, i) =>
+      (i.toLong, t, "en", "src0", t.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("star edges yield EXACTLY the components the pair edges yield (r15 swap safety)") {
     // the star-edge substitution in the three cluster consumers is
     // only sound if connectivity is preserved verbatim — assert label
-    // maps are identical on real data, not just "same cluster count"
+    // maps are identical on real data, not just "same cluster count".
+    // Both inputs: the gate corpus, where the decision picks pairs, and
+    // the mutation chains, where it picks star
     val d = "/root/testdata/sf0.001"
-    val viaPairs = DedupQueries.connectedComponents(
-      DedupQueries.minhashPairs(spark, d)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaStars = DedupQueries.connectedComponents(
-      DedupQueries.minhashStarEdges(spark, d)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStars === viaPairs)
-    graft.Caches.releaseAll()
+    for (dir <- Seq(d, mutationChainDir)) {
+      val viaPairs = DedupQueries.connectedComponents(
+        DedupQueries.minhashPairs(spark, dir)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val viaStars = DedupQueries.connectedComponents(
+        DedupQueries.minhashStarEdges(spark, dir)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(viaPairs.nonEmpty, dir)
+      assert(viaStars === viaPairs, dir)
+      graft.Caches.releaseAll()
+    }
   }
 
   test("edge-shape decision: pairs on shallow buckets, star on deep dup chains (r16)") {
     // the adaptive choice behind componentEdges must flip exactly with
-    // the regime the A/B measured (bench_adjudication_r16.json):
+    // the regime the A/B measured (artifacts/r16/bench_adjudication_r16.json):
     // shallow buckets (the gate corpus) → pair join; a deep
     // exact-dup chain (every band bucket depth ≈ corpus) → star edges
     assert(DedupQueries.decideEdgeShape(spark, "/root/testdata/sf0.001") === "pairs")
@@ -118,35 +152,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("edge-shape decision: star on MUTATION CHAINS, not just exact-copy spikes (r17)") {
-    // the sfdx100 regime (gen_decade100.py): near-dups are chains of
-    // 1-3 token mutations off EARLIER docs, so band buckets deepen
-    // with corpus size without any doc being an exact copy — the
-    // decade corpus the r16 threshold must keep separating. The
-    // fixture replays that recipe in miniature: 40 base docs + 160
-    // chained mutants. The candidate-weighted depth ratio must land
-    // far above PairDepthThreshold (the r16 measured deep regime was
-    // >= 50), not hover at the boundary.
-    val rnd = new scala.util.Random(17)
-    val vocab = Vector("spark", "window", "merge", "table", "column",
-      "vector", "stream", "value", "data", "small", "join", "filter")
-    def doc() = Seq.fill(40)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    // 10 base lineages, 300 single-token mutants — the dup-DENSE deep
-    // regime (sfdx100 has 5% plants over 5M docs, so lineages hold
-    // thousands of members; the miniature needs the same members-per-
-    // lineage shape, not the same plant rate)
-    val texts = scala.collection.mutable.ArrayBuffer[String]()
-    for (_ <- 0 until 10) texts += doc()
-    for (_ <- 0 until 300) {
-      val toks = texts(rnd.nextInt(texts.size)).split(" ")
-      toks(rnd.nextInt(toks.length)) = "dup"
-      texts += toks.mkString(" ")
-    }
-    val dir = graft.etl.TmpDirs.dir("edge_chain_spec")
-    import spark.implicits._
-    texts.toSeq.zipWithIndex.map { case (t, i) =>
-      (i.toLong, t, "en", "src0", t.length.toLong)
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // the decade corpus the r16 threshold must keep separating
+    // (fixture: [[mutationChainDir]]). The candidate-weighted depth
+    // ratio must land far above PairDepthThreshold (the r16 measured
+    // deep regime was >= 50), not hover at the boundary.
+    val dir = mutationChainDir
     assert(DedupQueries.decideEdgeShape(spark, dir) === "star")
     // and the decision is not a squeaker: recompute the ratio the
     // decision reads and require a clear margin over the threshold
@@ -161,7 +171,7 @@ class DedupSpec extends AnyFunSuite {
     // 12.06; the r16 copy-spike fixture: bucket depth ≈ corpus) — the
     // threshold still separates, but with a 1.5× not 6× margin, which
     // is why the decade corpus (sfdx100) gets its own measured
-    // decision in growth_edges_r17.json rather than an analogy
+    // decision in artifacts/r17/growth_edges_r17.json rather than an analogy
     assert(ratio > 1.25 * DedupQueries.PairDepthThreshold,
       f"chain fixture depth ratio $ratio%.1f too close to the threshold")
     graft.Caches.releaseAll()

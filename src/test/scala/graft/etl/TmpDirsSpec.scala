@@ -16,4 +16,20 @@ class TmpDirsSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"'$v'"), v)
     }
   }
+
+  test("deleteRecursively removes a whole tree and skips a directory it cannot list") {
+    val root = java.nio.file.Files.createTempDirectory("tmpdirsspec").toFile
+    val sub = new java.io.File(root, "a/b")
+    assert(sub.mkdirs())
+    java.nio.file.Files.writeString(new java.io.File(sub, "f.txt").toPath, "x")
+    java.nio.file.Files.writeString(new java.io.File(root, "g.txt").toPath, "y")
+    // listFiles() returns null for a directory that cannot be read
+    val unlistable = new java.io.File(root.getPath) {
+      override def listFiles(): Array[java.io.File] = null
+    }
+    TmpDirs.deleteRecursively(unlistable)
+    assert(root.exists(), "an unlistable non-empty directory stays")
+    TmpDirs.deleteRecursively(root)
+    assert(!root.exists())
+  }
 }

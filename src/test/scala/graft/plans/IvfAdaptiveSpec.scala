@@ -113,7 +113,7 @@ class IvfAdaptiveSpec extends AnyFunSuite {
   }
 
   test("the probe keeps the collapse armed on a duplicate-bearing corpus") {
-    // the production entry points route through collapseDecision —
+    // the production entry points route through hasDupQv —
     // on a spiked corpus the chosen path must still carry the
     // duplicate group's own clique (the IvfHierSpec spike contract,
     // re-asserted through the PUBLIC generator so the decision wiring

@@ -7,7 +7,8 @@ probed one decade further. This writes the THIRD point of each family's
 growth ladder — candidate VOLUME, not wall time, is what the GrowthProbe
 main measured over these (aggregate-only counting; no pair join is ever
 materialized to measure it). GrowthProbe is retired; its measurements
-remain in growth_probe_r15.json and the other growth_*.json artifacts:
+remain in artifacts/r15/growth_probe_r15.json and the other
+artifacts/r*/growth_*.json artifacts:
 
 - target/sfdx10/documents.parquet  — 500k docs  (100x gate, 10x sf1),
   the same closed-30-word-vocab + ~4.8% near-dup / ~0.2% exact-dup plant

@@ -6,7 +6,7 @@ DedupQueries.PairDepthThreshold) was set from three corpora; this
 writes the fourth point of the dup-chain family, on which the GrowthProbe
 main's `edges` family confirmed the regimes still separate one decade
 further. GrowthProbe is retired; its measurement remains in
-growth_edges_r17.json:
+artifacts/r17/growth_edges_r17.json:
 
 - target/sfdx100/documents.parquet — 5M docs (1000x gate, 100x sf1),
   the same closed-30-word-vocab + ~4.8% near-dup / ~0.2% exact-dup

@@ -4,11 +4,13 @@
 HierSwitchN = 32768 was the PRE-measurement placement these corpora
 were built to test (between the then-measured regimes: flat fine at
 n <= 8k gate corpora; hier 6.8-13x ahead at 80k/256k,
-growth_vecs_hier_r16.json). The ladder they fed put the crossover
-between 2k and 8k, and the SHIPPED constant is Ivf.HierSwitchN =
-4096 (Ivf.scala) — so under the final constant BOTH corpora here are
-adaptive-hier; the per-leg numbers are unaffected (the A/B forces
-each side via SPARK_GRAFT_VEC_QUANTIZER):
+artifacts/r16/growth_vecs_hier_r16.json). The ladder they fed put the
+crossover between 2k and 8k, and the SHIPPED constant is
+Ivf.HierSwitchN = 4096 (Ivf.scala) — so under the final constant BOTH
+corpora here are adaptive-hier; the per-leg numbers are unaffected
+(that A/B forced each side through a quantizer environment override
+that no longer exists; to force a leg now, call Ivf.candidatePairs
+or Ivf.hierCandidatePairs directly, as IvfAdaptiveSpec does):
 
 - target/sfvl24k/embeddings.parquet — 24576 vectors
 - target/sfvl48k/embeddings.parquet — 49152 vectors
@@ -16,7 +18,7 @@ each side via SPARK_GRAFT_VEC_QUANTIZER):
 Same unit-norm near-uniform 10-label recipe as gen_decade.py /
 gen_vec_saturate.py, seeds pinned. Bench/diagnostic input only —
 NEVER an oracle table. The GrowthProbe main that measured these is
-retired; its artifacts (growth_*.json) remain.
+retired; its artifacts (artifacts/r*/growth_*.json) remain.
 
 Usage: python3 tools/gen_vec_ladder_r17.py
 """

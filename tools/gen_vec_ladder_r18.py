@@ -20,7 +20,7 @@ Two consumers (VERDICT r17 Next #1 and #7):
 Same unit-norm near-uniform 10-label recipe as gen_vec_ladder_r17.py,
 seeds pinned. Bench/diagnostic input only — NEVER an oracle table.
 GrowthProbe is retired; what it measured on these corpora remains in
-growth_probe_query_r18.json and growth_vecs_hier_r18.json.
+artifacts/r18/growth_probe_query_r18.json and artifacts/r18/growth_vecs_hier_r18.json.
 
 Usage: python3 tools/gen_vec_ladder_r18.py
 """
